@@ -1,4 +1,5 @@
-"""Skew-handling primitives: salted joins and two-phase aggregation.
+"""Skew-handling primitives: salted two-phase aggregation and the
+hot-key report.
 
 Hot entities (one company mentioned in a large fraction of
 conversations — the synth corpus's ``hot_mention`` knob) make the join
@@ -6,7 +7,8 @@ and agg keys head-heavy at 10^12-turn scale.  AQE's skew-join split
 handles the join case at runtime; these helpers make the mitigation
 explicit and deterministic where we want it regardless of runtime
 statistics (north_rule: "salted aggregation for head-heavy
-predicates").
+predicates").  Joins need no salting here: linking broadcasts its
+dictionary, so the hot mention side never shuffles.
 
 Correctness property (tested): salted results == unsalted results.
 """
@@ -40,7 +42,7 @@ def _salt_col(
     # column then share a bucket — for counts those collapse in the
     # map-side partial combine anyway, but a hot key whose rows are
     # exact duplicates regains a single-task straggler (see
-    # salted_join docstring).
+    # salted_count docstring).
     if salt_on is None:
         cols = [F.col(c) for c in df.columns]
     elif isinstance(salt_on, str):
@@ -48,48 +50,6 @@ def _salt_col(
     else:
         cols = [F.col(c) for c in salt_on]
     return F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    buckets: int = 8,
-    how: str = "left",
-    salt_on: str | Sequence[str] | None = None,
-) -> DataFrame:
-    """Equi-join robust to hot keys on the fact side.
-
-    The dim side is exploded ``buckets``× with an explicit salt column;
-    the fact side gets a deterministic salt in [0, buckets).  Joining on
-    (key, salt) splits each hot key's rows across ``buckets`` tasks.
-    Use when ``dim`` is too large to broadcast but small enough to
-    replicate ``buckets``×; otherwise prefer ``F.broadcast``.
-
-    Only ``inner`` and ``left`` joins are valid: any dim-preserving
-    type (right/full/semi from the dim side) would return each
-    unmatched dim key once per salt replica.
-
-    ``salt_on``: stable discriminator column(s) for the fact-side salt
-    hash (e.g. a persisted row id).  Without it the salt hashes the
-    FULL row, so fact rows byte-identical in every column land in the
-    SAME bucket — a hot key whose rows are exact duplicates regains a
-    single-task straggler.  If no discriminating column exists at all,
-    persist a stable row id first and pass it here; do NOT salt on a
-    nondeterministic id (the SPARK-23207 hazard above).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join: how={how!r} unsupported — the exploded dim "
-            "side would multiply unmatched dim keys by `buckets`; use "
-            "'inner' or 'left'"
-        )
-    salted_dim = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    salted_fact = fact.withColumn("__salt", _salt_col(fact, buckets, salt_on))
-    out = salted_fact.join(salted_dim, [on, "__salt"], how)
-    return out.drop("__salt")
 
 
 def salted_count(
@@ -102,8 +62,15 @@ def salted_count(
     (keys, salt), then final sum per keys.  Equivalent to
     ``df.groupBy(*keys).count()`` (Spark's hash agg already does
     partial map-side combine; the explicit salt additionally bounds
-    the reduce-side width of any single hot key).  ``salt_on`` as in
-    :func:`salted_join`."""
+    the reduce-side width of any single hot key).
+
+    ``salt_on``: stable discriminator column(s) for the salt hash (e.g.
+    a persisted row id).  Without it the salt hashes the FULL row, so
+    rows byte-identical in every column land in the SAME bucket — a hot
+    key whose rows are exact duplicates regains a single-task
+    straggler.  If no discriminating column exists at all, persist a
+    stable row id first and pass it here; do NOT salt on a
+    nondeterministic id (the SPARK-23207 hazard in ``_salt_col``)."""
     partial = (
         df.withColumn("__salt", _salt_col(df, buckets, salt_on))
         .groupBy(*keys, "__salt")

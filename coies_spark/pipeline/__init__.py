@@ -3,8 +3,7 @@
 1. assemble  — windowed turn assembly per conv_id (stable turn order)
 2. detect    — vectorized one-shot mention detection (Arrow kernel,
                broadcast example artifacts)
-3. link      — entity linking: broadcast candidate dictionary + salted
-               repartition join for hot surfaces
+3. link      — entity linking: broadcast candidate-dictionary join
 4. canonical — connected-components canonicalization (iterative
                DataFrame label propagation)
 5. triples   — (subj, pred, obj) materialization partitioned by pred,

@@ -2,8 +2,10 @@
 
 Scale design (10^12 turns, SURVEY.md §7):
 
-* ``assemble_docs`` is the ONLY shuffle in the extraction path — a
-  single hash partition by ``conv_id``.  On an Iceberg table bucketed
+* ``assemble_docs`` holds the ONLY shuffles in the extraction path —
+  a hash partition by ``conv_id``, one per input side (production
+  reads the raw side only; fixture parity mode adds the tagged side
+  and a left join that reuses that partitioning).  On tables bucketed
   by ``bucket(N, conv_id)`` this becomes shuffle-free (storage
   partitioned join semantics); on plain parquet AQE coalesces it.
 * ``detect_mentions`` is shuffle-free: one row per conversation flows
@@ -39,52 +41,40 @@ MENTION_SCHEMA = (
 MAX_TURNS_PER_DOC = 10_000
 
 
-def _flag_side(df: DataFrame, is_raw: bool, max_turns: int) -> DataFrame:
-    """Cap + project one input stream with its source flag — shared by
-    the union assembly strategy and the fused extraction path, whose
-    emission-identity depends on this projection staying identical."""
-    return df.where(F.col("turn_idx") < max_turns).select(
-        "conv_id", "turn_idx", "text", F.lit(is_raw).alias("is_raw")
-    )
-
-
 def assemble_docs(
     transcripts: DataFrame,
     tagged_transcripts: Optional[DataFrame] = None,
     max_turns: int = MAX_TURNS_PER_DOC,
-    strategy: str = "union",
 ) -> DataFrame:
     """(conv_id, raw_text, context_text): turns concatenated with '\\n'
-    under stable (turn_idx) order.
+    under stable (turn_idx, text) order; NULL turn texts are skipped.
 
     '\\n' is both a sentence and token delimiter (file_tools.py:67,75),
     so joined turns tokenize exactly like the reference's whole-file
     reads — and per-turn ``text`` is never modified (per-row invariant).
 
-    ``max_turns`` bounds the assembled row: turns with ``turn_idx >=
-    max_turns`` are dropped BEFORE the aggregation, so one pathological
-    multi-GB conversation can neither blow the 2 GB row limit nor skew
-    its reducer.  The filter is deterministic (turn_idx is the 0-based
-    turn position) and shuffle-free; pass ``max_turns=None``-equivalent
-    by raising the cap if a deployment truly needs unbounded docs.
+    ``max_turns`` (a positive int) bounds the assembled row: turns with
+    ``turn_idx >= max_turns`` are dropped BEFORE the aggregation, so one
+    pathological multi-GB conversation can neither blow the 2 GB row
+    limit nor skew its reducer.  The filter is deterministic (turn_idx
+    is the 0-based turn position) and shuffle-free; a deployment that
+    needs longer docs raises the cap — there is no uncapped mode.
 
     ``tagged_transcripts``: optional tagged twins (fixture parity mode —
     the reference reads context windows from the tagged file and
     candidates from the raw one, file_tools.py:103-105).  Production
-    passes None → context = raw.
-
-    ``strategy`` (parity mode only):
-    * ``"union"`` (default) — union both streams with a source flag and
-      aggregate ONCE: two conditional collect_lists in a single
-      groupBy, so the whole parity assembly is one shuffle (no join,
-      no merge sorts).  collect_list drops the nulls the flag
-      condition produces, which is what scopes each list to its side.
-    * ``"join"`` — aggregate each side and left-join: 2 aggregations +
-      join, but every operator keys on conv_id, so over co-bucketed
-      input tables (sources/bucketed.py) the entire plan needs ZERO
-      exchanges — a union of two bucketed scans would discard the
-      bucket partitioning and reintroduce the shuffle.
+    passes None → context = raw.  Parity mode aggregates each side and
+    left-joins on conv_id: rows are the conversations with >=1 raw
+    turn, and context falls back to raw only when the conversation has
+    NO tagged rows.  Every operator keys on conv_id, so over
+    co-bucketed input tables (sources/bucketed.py) the whole plan runs
+    with ZERO exchanges; unbucketed input pays one shuffle per side.
     """
+    if type(max_turns) is not int or max_turns < 1:
+        raise ValueError(
+            f"assemble_docs: max_turns must be a positive int, got "
+            f"{max_turns!r}"
+        )
 
     def concat_turns(df: DataFrame, out: str) -> DataFrame:
         return (
@@ -103,53 +93,12 @@ def assemble_docs(
             )
         )
 
+    raw = concat_turns(transcripts, "raw_text")
     if tagged_transcripts is None:
-        raw = concat_turns(transcripts, "raw_text")
         return raw.withColumn("context_text", F.col("raw_text"))
-    if strategy == "join":
-        raw = concat_turns(transcripts, "raw_text")
-        tagged = concat_turns(tagged_transcripts, "context_text")
-        return raw.join(tagged, "conv_id", "left").withColumn(
-            "context_text", F.coalesce("context_text", "raw_text")
-        )
-
-    u = _flag_side(transcripts, True, max_turns).unionByName(
-        _flag_side(tagged_transcripts, False, max_turns)
-    )
-
-    def txt(flag: bool) -> F.Column:
-        return F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("is_raw") == flag,
-                            F.struct("turn_idx", "text"),
-                        )
-                    )
-                ),
-                lambda s: s.text,
-            ),
-        )
-
-    # presence flags (not an empty-string sentinel: "" is a legal
-    # assembled text for an all-empty-turn conversation) keep the row
-    # set and the fallback exactly equal to the left-join strategy:
-    # rows = conversations with >=1 raw turn; context falls back to raw
-    # only when the conversation has NO tagged twin rows
-    agg = u.groupBy("conv_id").agg(
-        txt(True).alias("raw_text"),
-        txt(False).alias("ctx"),
-        F.max(F.col("is_raw").cast("int")).alias("has_raw"),
-        F.max((~F.col("is_raw")).cast("int")).alias("has_tagged"),
-    )
-    return agg.where(F.col("has_raw") == 1).select(
-        "conv_id",
-        "raw_text",
-        F.when(F.col("has_tagged") == 1, F.col("ctx"))
-        .otherwise(F.col("raw_text"))
-        .alias("context_text"),
+    tagged = concat_turns(tagged_transcripts, "context_text")
+    return raw.join(tagged, "conv_id", "left").withColumn(
+        "context_text", F.coalesce("context_text", "raw_text")
     )
 
 
@@ -192,123 +141,11 @@ def extract_mentions(
     transcripts: DataFrame,
     artifacts: ExampleArtifacts,
     tagged_transcripts: Optional[DataFrame] = None,
-    assemble_strategy: str = "union",
 ) -> DataFrame:
-    """assemble → detect (the minimum end-to-end slice).
-
-    ``assemble_strategy``: pass ``"join"`` when the inputs are
-    co-bucketed tables (sources/bucketed.py) — the join strategy rides
-    the bucket partitioning with ZERO exchanges, which the default
-    union strategy forfeits (a union of bucketed scans discards the
-    partitioning).
-    """
+    """assemble → detect (the minimum end-to-end slice)."""
     return detect_mentions(
-        assemble_docs(
-            transcripts, tagged_transcripts, strategy=assemble_strategy
-        ),
-        artifacts,
+        assemble_docs(transcripts, tagged_transcripts), artifacts
     )
-
-
-def extract_mentions_fused(
-    transcripts: DataFrame,
-    artifacts: ExampleArtifacts,
-    tagged_transcripts: Optional[DataFrame] = None,
-    max_turns: int = MAX_TURNS_PER_DOC,
-) -> DataFrame:
-    """assemble + detect FUSED into one Arrow pass (emission-identical
-    to ``extract_mentions``, asserted in tests/test_pipeline_spark.py).
-
-    The plan is shuffle → sort-within-partitions → mapInPandas: turns
-    of a conversation arrive contiguously in turn order, the kernel's
-    iterator streams them, concatenates raw/context text on the fly
-    (carrying the open conversation across Arrow batch boundaries),
-    and runs detection directly.
-
-    Wall-clock at bench scale is ≈ equal to the staged path (measured
-    +4% at local[32], 375k turns — detection dominates both).  The
-    reason this path exists is MEMORY shape at 100 TB: the staged
-    path's ObjectHashAggregate (collect_list is not codegen-able)
-    buffers every conversation in a task as turn-struct arrays in JVM
-    aggregate state, while the sort-based stream holds exactly ONE
-    open conversation per task, with the sorter spilling to disk under
-    pressure — the difference between task memory scaling with
-    conversations-per-task and scaling with the largest conversation.
-
-    Row semantics match ``assemble_docs``: turns with ``turn_idx >=
-    max_turns`` are dropped pre-shuffle, conversations with no raw
-    turns emit nothing, and a conversation with no tagged twin uses its
-    raw text as context.
-    """
-    sc = transcripts.sparkSession.sparkContext
-    bc = sc.broadcast(artifacts)
-
-    u = _flag_side(transcripts, True, max_turns)
-    if tagged_transcripts is not None:
-        u = u.unionByName(_flag_side(tagged_transcripts, False, max_turns))
-    # sort includes text as the tiebreak so duplicate turn_idx values
-    # concatenate in the same order as assemble_docs's
-    # array_sort(struct(turn_idx, text)); restricting the globally
-    # sorted rows to one side preserves that side's (turn_idx, text)
-    # order
-    clustered = u.repartition("conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx", "text"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        art = bc.value
-        # open conversation: [conv_id, raw_parts, ctx_parts, saw_tagged]
-        cur = None
-
-        def finish(rows: list) -> None:
-            conv_id, raw_parts, ctx_parts, saw_tagged = cur
-            if not raw_parts:
-                return  # no raw text → no candidates (assemble parity:
-                #         the staged doc would have raw_text "" and
-                #         detect emits nothing from an empty raw side)
-            raw_text = "\n".join(raw_parts)
-            # the raw fallback keys on tagged ROW presence (like the
-            # staged has_tagged flag), not on surviving non-null texts:
-            # a twin whose rows are all NULL must yield context "",
-            # not fall back to raw
-            context = "\n".join(ctx_parts) if saw_tagged else raw_text
-            for e in detect_doc(raw_text, context, art):
-                rows.append(
-                    (
-                        conv_id,
-                        e.pred,
-                        " ".join(e.gram),
-                        float(e.score),
-                        " ".join(e.seed_tokens),
-                    )
-                )
-
-        for pdf in batches:
-            rows: list = []
-            for conv_id, text, is_raw in zip(
-                pdf["conv_id"], pdf["text"], pdf["is_raw"]
-            ):
-                if cur is None or conv_id != cur[0]:
-                    if cur is not None:
-                        finish(rows)
-                    cur = [conv_id, [], [], False]
-                if not is_raw:
-                    cur[3] = True
-                # NULL turn text is skipped, matching concat_ws's
-                # null-element behavior in assemble_docs
-                if text is not None:
-                    cur[1 if is_raw else 2].append(text)
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "pred", "obj", "score", "seed"]
-            )
-        if cur is not None:
-            rows = []
-            finish(rows)
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "pred", "obj", "score", "seed"]
-            )
-
-    return clustered.mapInPandas(run, schema=MENTION_SCHEMA)
 
 
 SPAN_SCHEMA = "doc_id long, span_idx int, entity_type string, mention string"

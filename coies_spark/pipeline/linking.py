@@ -1,15 +1,11 @@
-"""Stage 3: entity linking (north_star: broadcast candidate
-dictionaries + salted hash-join disambiguation for hot surfaces).
+"""Stage 3: entity linking against a broadcast candidate dictionary.
 
 A candidate dictionary maps a normalized mention surface to an entity
 id.  Surfaces are normalized exactly as extraction normalizes them
 (lowercase reference tokenization, space-joined), so linking is a pure
-equi-join:
-
-* dictionary fits in memory (the common case — entity dictionaries are
-  MBs even at web scale) → ``F.broadcast`` map-side join, zero shuffle;
-* oversized dictionary and/or hot mention surfaces → ``salted_join``
-  (operators/salted.py) splitting each hot key across tasks.
+equi-join, done as an ``F.broadcast`` map-side join with zero shuffle
+(entity dictionaries are MBs even at web scale).  Because the
+mention side never shuffles, hot mention surfaces cannot skew a task.
 
 Unlinked mentions keep a deterministic surface-derived id so
 downstream canonicalization can still merge them by alias.
@@ -21,7 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokens_col
-from ..operators.salted import salted_join
 
 
 def normalize_surface(col) -> "F.Column":
@@ -39,23 +34,12 @@ def build_dictionary(spark, entries: list[tuple[str, str]]) -> DataFrame:
     ).dropDuplicates(["surface"])
 
 
-def link_mentions(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    strategy: str = "broadcast",
-    salt_buckets: int = 8,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """mentions(conv_id, pred, obj, ...) × dictionary(surface, entity_id)
     → + entity_id (never null: surface-derived fallback id).
     """
     m = mentions.withColumn("surface", F.col("obj"))
-    if strategy == "broadcast":
-        joined = m.join(F.broadcast(dictionary), "surface", "left")
-    elif strategy == "salted":
-        joined = salted_join(m, dictionary, on="surface",
-                             buckets=salt_buckets, how="left")
-    else:
-        raise ValueError(f"unknown linking strategy: {strategy}")
+    joined = m.join(F.broadcast(dictionary), "surface", "left")
     return joined.withColumn(
         "entity_id",
         F.coalesce(

@@ -67,17 +67,11 @@ def run_pipeline(
     work_dir: str,
     dictionary: Optional[DataFrame] = None,
     tagged_transcripts: Optional[DataFrame] = None,
-    linking_strategy: str = "broadcast",
-    assemble_strategy: str = "union",
     with_beliefs: bool = False,
 ) -> StageRunner:
     """Full checkpointed run; returns the StageRunner (stage dfs +
     metrics).  Fingerprint covers the extraction config so changing any
     parameter invalidates downstream snapshots.
-
-    ``assemble_strategy="join"`` keeps assembly shuffle-free over
-    co-bucketed input tables (sources/bucketed.py); the default union
-    strategy is one shuffle and right for unbucketed input.
 
     ``with_beliefs=True`` appends the evidence→belief stages
     (``ops.kg``): per-mention evidence rows timestamped with their
@@ -91,23 +85,17 @@ def run_pipeline(
         fingerprint={
             "config": asdict(artifacts.config),
             "n_seeds": len(artifacts.seeds),
-            "linking": linking_strategy,
-            "assemble": assemble_strategy,
         },
     )
     docs = runner.stage(
-        "s1_docs",
-        lambda: assemble_docs(
-            transcripts, tagged_transcripts, strategy=assemble_strategy
-        ),
+        "s1_docs", lambda: assemble_docs(transcripts, tagged_transcripts)
     )
     mentions = runner.stage(
         "s2_mentions", lambda: detect_mentions(docs, artifacts)
     )
     if dictionary is not None:
         linked = runner.stage(
-            "s3_linked",
-            lambda: link_mentions(mentions, dictionary, linking_strategy),
+            "s3_linked", lambda: link_mentions(mentions, dictionary)
         )
         canonical = runner.stage(
             "s4_canonical", lambda: canonicalize(linked)

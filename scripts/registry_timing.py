@@ -11,15 +11,17 @@ summary.  Purely additive tooling: does not touch bench.py or the
 oracle SQL.
 
 Usage: python scripts/registry_timing.py [sf_dir] [--json OUT]
+(runs from any cwd; local[$SPARK_GRAFT_CPUS] cores, see session.py)
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from coies_spark.session import get_spark  # noqa: E402
@@ -32,7 +34,7 @@ def main() -> None:
     if "--json" in sys.argv:
         out_path = sys.argv[sys.argv.index("--json") + 1]
 
-    spark = get_spark("registry-timing", cores=32)
+    spark = get_spark("registry-timing")
     table = entrymod.queries()
     results: dict[str, dict] = {}
     for name, fn in table.items():
@@ -53,10 +55,13 @@ def main() -> None:
     ranked = sorted(results.items(), key=lambda kv: -kv[1]["sec"])
     print("\n=== slowest 25 ===")
     for name, r in ranked[:25]:
-        print(f"{r['sec']:8.2f}s  rows={r['rows']:>9}  {name}")
-    total = round(sum(r["sec"] for r in results.values()), 1)
+        rows = "ERROR" if r["err"] else r["rows"]
+        print(f"{r['sec']:8.2f}s  rows={rows:>9}  {name}")
+    ok = [r for r in results.values() if not r["err"]]
     errs = [n for n, r in results.items() if r["err"]]
-    print(f"total {total}s over {len(results)} queries; errors: {errs}")
+    total = round(sum(r["sec"] for r in ok), 1)
+    print(f"total {total}s over {len(ok)} ok queries "
+          f"(errored queries excluded); errors: {errs}")
     if out_path:
         with open(out_path, "w") as f:
             json.dump(results, f, indent=0)

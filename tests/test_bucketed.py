@@ -46,7 +46,6 @@ def test_bucketed_assembly_zero_shuffles(spark, bucketed_tables):
         doc = assemble_docs(
             read_transcripts(spark, "raw_b"),
             read_transcripts(spark, "tagged_b"),
-            strategy="join",  # rides the bucket partitioning shuffle-free
         )
         p = plan_of(doc)
         assert "SortMergeJoin" in p, p
@@ -72,7 +71,6 @@ def test_bucketed_results_match_unbucketed(spark, bucketed_tables):
             assemble_docs(
                 read_transcripts(spark, "raw_b"),
                 read_transcripts(spark, "tagged_b"),
-                strategy="join",
             ).collect(),
         )
     )

@@ -12,7 +12,7 @@ from coies_spark.operators.graph import (
     connected_components,
     connected_components_star,
 )
-from coies_spark.operators.salted import salted_count, salted_join
+from coies_spark.operators.salted import salted_count
 
 pytestmark = pytest.mark.spark
 
@@ -31,26 +31,11 @@ class TestSalted:
         }
         assert plain == salted
 
-    def test_salted_join_equals_plain(self, spark):
-        fact = spark.range(0, 2000).withColumn(
-            "k", F.when(F.col("id") % 4 == 0, "hot").otherwise(
-                (F.col("id") % 13).cast("string"))
-        )
-        dim = spark.createDataFrame(
-            [("hot", "H")] + [(str(i), f"v{i}") for i in range(13)],
-            "k string, v string",
-        )
-        a = sorted(map(tuple, fact.join(dim, "k", "left")
-                       .select("id", "v").collect()))
-        b = sorted(map(tuple, salted_join(fact, dim, "k")
-                       .select("id", "v").collect()))
-        assert a == b
-
     def test_salt_on_discriminator_spreads_duplicate_rows(self, spark):
         """Byte-identical hot-key rows collapse into ONE bucket under
         the default full-row salt (the documented straggler limitation);
         salting on a stable row-id discriminator spreads them across
-        buckets, and the join result is unchanged."""
+        buckets (``salted_count``'s ``salt_on``)."""
         from coies_spark.operators.salted import _salt_col
 
         # 1000 rows of the hot key, identical in every business column
@@ -69,14 +54,6 @@ class TestSalted:
             .distinct().count()
         )
         assert n_disc == 8  # full spread across buckets
-
-        dim = spark.createDataFrame([("hot", "H")], "k string, v string")
-        plain = sorted(map(tuple, dup.join(dim, "k", "left")
-                           .select("row_id", "v").collect()))
-        salted = sorted(map(tuple,
-                            salted_join(dup, dim, "k", salt_on="row_id")
-                            .select("row_id", "v").collect()))
-        assert plain == salted
 
     def test_salted_count_salt_on_equals_plain(self, spark):
         df = spark.range(0, 3000).select(

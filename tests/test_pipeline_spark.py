@@ -8,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from coies_spark.core.metrics import triple_prf
-from coies_spark.core.oneshot import emissions_to_triples, oracle_extract_doc
+from coies_spark.core.oneshot import (
+    detect_doc,
+    emissions_to_triples,
+    oracle_extract_doc,
+)
 from coies_spark.data import synth
 from coies_spark.pipeline.canonicalize import canonicalize
 from coies_spark.pipeline.extract import assemble_docs, extract_mentions
@@ -99,21 +103,6 @@ class TestExtractionParity:
 
 
 class TestLinking:
-    def test_broadcast_and_salted_agree(self, spark, spark_transcripts, artifacts):
-        raw, tagged = spark_transcripts
-        mentions = extract_mentions(raw, artifacts, tagged).cache()
-        dictionary = build_dictionary(
-            spark,
-            [("acme holdings", "E1"), ("Acme Holdings", "E1b"),
-             ("revenues", "E2")],
-        )
-        a = link_mentions(mentions, dictionary, "broadcast")
-        b = link_mentions(mentions, dictionary, "salted")
-        cols = ["conv_id", "pred", "obj", "entity_id"]
-        assert sorted(map(tuple, a.select(cols).collect())) == sorted(
-            map(tuple, b.select(cols).collect())
-        )
-
     def test_unlinked_get_surface_ids(self, spark, spark_transcripts, artifacts):
         raw, tagged = spark_transcripts
         mentions = extract_mentions(raw, artifacts, tagged)
@@ -231,132 +220,148 @@ def test_assemble_docs_caps_oversized_conversations(spark):
     # default cap leaves normal conversations untouched
     full = {r.conv_id: r.raw_text for r in assemble_docs(df).collect()}
     assert full["big"] == "\n".join(f"turn {i}" for i in range(30))
+    # no uncapped mode: a missing or non-positive cap is rejected, not
+    # turned into a filter that silently drops every turn
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="max_turns"):
+            assemble_docs(df, max_turns=bad)
 
 
-def test_fused_extraction_matches_staged(spark, spark_transcripts, artifacts):
-    """extract_mentions_fused must be emission-identical to the staged
-    assemble->detect path, including when Arrow batch boundaries split
-    a conversation (forced via a tiny maxRecordsPerBatch) and across
-    both parity and production (raw-only) modes."""
-    from coies_spark.pipeline.extract import extract_mentions_fused
+TURNS_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
 
-    raw, tagged = spark_transcripts
-    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(batch_conf)
-    spark.conf.set(batch_conf, "7")  # force mid-conversation splits
-    try:
-        for tg in (tagged, None):
-            want = sorted(
-                map(tuple, extract_mentions(raw, artifacts, tg).collect())
-            )
-            got = sorted(
-                map(
-                    tuple,
-                    extract_mentions_fused(raw, artifacts, tg).collect(),
-                )
-            )
-            assert got == want
-        assert len(want) > 0
-    finally:
-        spark.conf.set(batch_conf, old)
+# (conv_id, turn_idx, text) edge rows, each conv named after its shape
+EDGE_RAW = [
+    ("both", 0, "hello there"),
+    ("raw_only", 0, "solo words"),
+    ("empty_text", 0, ""),
+    ("null_text", 0, None),
+    ("null_text", 1, "after a null"),
+    # duplicate turn_idx: the text breaks the tie
+    ("dup_idx", 0, "zebra words"),
+    ("dup_idx", 0, "apple words"),
+    ("null_tagged", 0, "real raw words"),
+]
+EDGE_TAGGED = [
+    ("both", 0, "hello there"),
+    ("tagged_only", 0, "ghost"),
+    ("empty_text", 0, ""),
+    # twin present but all its texts NULL: context is "", NOT raw
+    ("null_tagged", 0, None),
+]
 
 
-def test_fused_extraction_edge_rows(spark, artifacts):
-    """Row semantics parity on the degenerate shapes: tagged-only
-    conversation (emits nothing), raw-only (context falls back to
-    raw), empty-text turns."""
-    from coies_spark.pipeline.extract import extract_mentions_fused
+def reference_assembly(raw_rows, tagged_rows):
+    """Pure-Python assemble_docs: sorted (conv_id, raw_text,
+    context_text) rows.  Turns ordered by (turn_idx, text), NULL texts
+    skipped, joined with '\\n'; tagged-only conversations dropped;
+    context falls back to raw only when the conversation has no tagged
+    rows at all."""
 
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    raw = spark.createDataFrame(
-        [
-            ("both", 0, "u", "hello there", None, None),
-            ("raw_only", 0, "u", "solo words", None, None),
-            ("empty_text", 0, "u", "", None, None),
-            ("null_text", 0, "u", None, None, None),
-            ("null_text", 1, "u", "after a null", None, None),
-            # duplicate turn_idx: order must follow the staged
-            # (turn_idx, text) tiebreak
-            ("dup_idx", 0, "u", "zebra words", None, None),
-            ("dup_idx", 0, "a", "apple words", None, None),
-            ("null_tagged", 0, "u", "real raw words", None, None),
-        ],
-        schema,
-    )
-    tagged = spark.createDataFrame(
-        [
-            ("both", 0, "u", "hello there", None, None),
-            ("tagged_only", 0, "u", "ghost", None, None),
-            ("empty_text", 0, "u", "", None, None),
-            # twin present but all its texts NULL: context must be ""
-            # (tagged rows exist), NOT a fallback to raw
-            ("null_tagged", 0, "u", None, None, None),
-        ],
-        schema,
-    )
-    want = sorted(
-        map(tuple, extract_mentions(raw, artifacts, tagged).collect())
-    )
-    got = sorted(
-        map(
-            tuple,
-            extract_mentions_fused(raw, artifacts, tagged).collect(),
-        )
-    )
-    assert got == want
-    # the assembled-text parity behind it: fused must see the same
-    # concatenations assemble_docs produces for these shapes
-    docs = {
-        r.conv_id: (r.raw_text, r.context_text)
-        for r in assemble_docs(raw, tagged).collect()
-    }
-    assert docs["null_text"][0] == "after a null"
-    assert docs["dup_idx"][0] == "apple words\nzebra words"
-    assert docs["null_tagged"] == ("real raw words", "")
+    def concat(rows):
+        turns = {}
+        for conv, idx, text in rows:
+            kept = turns.setdefault(conv, [])
+            if text is not None:
+                kept.append((idx, text))
+        return {c: "\n".join(t for _, t in sorted(ts))
+                for c, ts in turns.items()}
+
+    raw = concat(raw_rows)
+    ctx = raw if tagged_rows is None else concat(tagged_rows)
+    return sorted((c, r, ctx.get(c, r)) for c, r in raw.items())
+
+
+def turns_frame(spark, rows):
+    """Transcript turns from (conv_id, turn_idx, text) rows."""
+    data = [(c, i, "u", t, None, None) for c, i, t in rows]
+    return spark.createDataFrame(data, TURNS_SCHEMA)
+
+
+def assembled(spark, raw_rows, tagged_rows):
+    """assemble_docs as sorted (conv_id, raw_text, context_text)
+    tuples; ``tagged_rows=None`` is production mode (no tagged twin)."""
+    tagged = None if tagged_rows is None else turns_frame(spark, tagged_rows)
+    docs = assemble_docs(turns_frame(spark, raw_rows), tagged)
+    return sorted(map(tuple, docs.collect()))
 
 
 def test_assemble_union_join_property(spark):
-    """Randomized equivalence of the union and join assembly
-    strategies over arbitrary conv/turn structures (duplicate turn
-    indices, empty texts, one-sided conversations)."""
+    """Randomized check of the raw/tagged left-join assembly against
+    the pure-Python reference over arbitrary conv/turn structures
+    (duplicate turn indices, empty and NULL texts, one-sided
+    conversations, production mode without tagged twins)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     row_st = st.tuples(
         st.sampled_from(["c0", "c1", "c2", "c3"]),
         st.integers(min_value=0, max_value=4),
-        st.sampled_from(["", "a", "b b", "c words here"]),
+        st.sampled_from([None, "", "a", "b b", "c words here"]),
     )
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-
-    def frame(rows):
-        data = [(c, i, "u", t, None, None) for c, i, t in rows]
-        return spark.createDataFrame(data, schema)
 
     @settings(
-        max_examples=8,
+        max_examples=10,
         deadline=None,
         suppress_health_check=[HealthCheck.too_slow],
     )
     @given(
         raw_rows=st.lists(row_st, min_size=1, max_size=12),
-        tagged_rows=st.lists(row_st, min_size=0, max_size=12),
+        tagged_rows=st.none() | st.lists(row_st, max_size=12),
     )
     def check(raw_rows, tagged_rows):
-        raw, tagged = frame(raw_rows), frame(tagged_rows)
-        u = sorted(map(tuple, assemble_docs(raw, tagged).collect()))
-        j = sorted(
-            map(tuple, assemble_docs(raw, tagged, strategy="join").collect())
+        assert assembled(spark, raw_rows, tagged_rows) == reference_assembly(
+            raw_rows, tagged_rows
         )
-        assert u == j
 
     check()
+
+
+def test_fused_extraction_edge_rows(spark, corpus, artifacts):
+    """The named degenerate shapes through the one assemble -> detect
+    path: the assembled rows are pinned explicitly, and extract_mentions
+    emits exactly what detect_doc gives on the reference assembly (a
+    corpus conversation rides along so the emission set is not empty;
+    tagged-only conversations emit nothing)."""
+    pinned = [
+        ("both", "hello there", "hello there"),
+        ("dup_idx", "apple words\nzebra words", "apple words\nzebra words"),
+        ("empty_text", "", ""),
+        ("null_tagged", "real raw words", ""),
+        ("null_text", "after a null", "after a null"),
+        ("raw_only", "solo words", "solo words"),
+    ]
+    assert assembled(spark, EDGE_RAW, EDGE_TAGGED) == pinned
+    assert reference_assembly(EDGE_RAW, EDGE_TAGGED) == pinned
+
+    doc = next(
+        d for d in corpus.all_docs
+        if detect_doc(d.raw_text, d.tagged_text, artifacts)
+    )
+    raw_rows = EDGE_RAW + [("corpus", 0, doc.raw_text)]
+    tagged_rows = EDGE_TAGGED + [("corpus", 0, doc.tagged_text)]
+
+    mentions = extract_mentions(
+        turns_frame(spark, raw_rows), artifacts,
+        turns_frame(spark, tagged_rows),
+    )
+    got = sorted(
+        (r.conv_id, r.pred, r.obj, r.seed, round(r.score, 9))
+        for r in mentions.collect()
+    )
+    want = sorted(
+        (conv, e.pred, " ".join(e.gram), " ".join(e.seed_tokens),
+         round(float(e.score), 9))
+        for conv, raw_text, context_text in reference_assembly(
+            raw_rows, tagged_rows
+        )
+        for e in detect_doc(raw_text, context_text, artifacts)
+    )
+    assert got == want
+    convs = {m[0] for m in got}
+    assert "corpus" in convs and "tagged_only" not in convs
 
 
 def test_kg_digest_constants(spark):

@@ -199,33 +199,31 @@ def test_ivf_pq_probe_partition_pruned(spark, tmp_path):
 
 
 def test_extraction_path_shuffle_count(spark):
-    """Raw + tagged assembly (default union strategy): the flag-union
-    collapses the parity-mode assembly to a SINGLE conditional
-    aggregation — exactly one shuffle, no join.  The join strategy
-    (for co-bucketed input) keeps 2 agg shuffles + a partitioning-
-    reusing join."""
-    raw = spark.createDataFrame(
-        [("c1", 0, "u", "hello", None, None)],
+    """Raw + tagged assembly on unbucketed input: each side shuffles
+    once by conv_id for its aggregation and the sort-merge join reuses
+    that partitioning, so exactly two hash exchanges, no third for the
+    join (over co-bucketed tables it drops to zero —
+    tests/test_bucketed.py)."""
+    schema = (
         "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
+        "tool string, ts timestamp"
     )
+    raw = spark.createDataFrame([("c1", 0, "u", "hello", None, None)], schema)
     tagged = spark.createDataFrame(
-        [("c1", 0, "u", "<comp.>hello</>", None, None)],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
+        [("c1", 0, "u", "<comp.>hello</>", None, None)], schema
     )
     p = plan_of(assemble_docs(raw, tagged))
-    assert p.count("Exchange") == 1
-    assert "Join" not in p
-    p_join = plan_of(assemble_docs(raw, tagged, strategy="join"))
-    assert p_join.count("Exchange") <= 3  # 2 agg shuffles (+1 AQE max)
+    assert p.count("Exchange hashpartitioning") == 2, p
+    assert "SortMergeJoin" in p, p
 
 
 def test_assemble_strategies_agree_on_edge_cases(spark):
-    """Union and join strategies must emit identical rows, including:
-    conversation only in tagged (dropped), conversation with no tagged
-    twin (context falls back to raw), all-empty-text turns (kept, with
-    empty context distinct from missing twin)."""
+    """The raw/tagged left join emits identical rows whichever join
+    strategy adaptive execution settles on (sort-merge, or a runtime
+    broadcast of the small tagged side), including: conversation only
+    in tagged (dropped), no tagged twin (context falls back to raw),
+    twin whose texts are all NULL (context "", not raw), all-empty-text
+    turns (kept)."""
     schema = (
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp"
@@ -236,6 +234,7 @@ def test_assemble_strategies_agree_on_edge_cases(spark):
             ("both", 1, "a", "world", None, None),
             ("raw_only", 0, "u", "solo", None, None),
             ("empty_text", 0, "u", "", None, None),
+            ("null_tagged", 0, "u", "real raw words", None, None),
         ],
         schema,
     )
@@ -245,16 +244,32 @@ def test_assemble_strategies_agree_on_edge_cases(spark):
             ("both", 1, "a", "world", None, None),
             ("tagged_only", 0, "u", "ghost", None, None),
             ("empty_text", 0, "u", "", None, None),
+            ("null_tagged", 0, "u", None, None, None),
         ],
         schema,
     )
-    u = sorted(map(tuple, assemble_docs(raw, tagged).collect()))
-    j = sorted(
-        map(tuple, assemble_docs(raw, tagged, strategy="join").collect())
-    )
-    assert u == j
-    convs = [r[0] for r in u]
-    assert "tagged_only" not in convs and "raw_only" in convs
+    want = [
+        ("both", "hello\nworld", "<comp.>hello</>\nworld"),
+        ("empty_text", "", ""),
+        ("null_tagged", "real raw words", ""),
+        ("raw_only", "solo", "solo"),
+    ]
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    try:
+        for threshold, join in (("-1", "SortMergeJoin"),
+                                ("10485760", "BroadcastHashJoin")):
+            spark.conf.set(key, threshold)
+            docs = assemble_docs(raw, tagged)
+            assert sorted(map(tuple, docs.collect())) == want
+            final = plan_of(docs)
+            assert "isFinalPlan=true" in final, final
+            assert f"{join} [conv_id" in final, final
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def test_contamination_broadcasts_benchmark_side(spark):
