@@ -11,9 +11,9 @@ This module holds the algorithm of the reference's flagship model
 
 * ``detect_doc`` — a numpy-vectorized kernel with pinned deterministic
   tie-breaking and positional window membership.  This is what the
-  Spark pipeline runs per conversation inside an Arrow
-  ``applyInPandas`` group (pipeline/extract.py), with the example-side
-  artifacts broadcast.
+  Spark pipeline runs per conversation inside Arrow ``mapInPandas``
+  batches (pipeline/extract.py), with the example-side artifacts
+  broadcast.
 
 Algorithm per (document, example mention m of type k) — citations into
 /root/reference/:

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokens_col
+from ..operators.spread import spread_to_slots
 
 
 def mention_evidence(
@@ -1735,11 +1736,7 @@ def gazetteer_mentions(
     # cores — spread the scan FIRST when it arrives under the
     # cluster's parallelism (guide §2.5 input-skew rule; a no-op for
     # well-partitioned corpora, where npart ≥ defaultParallelism)
-    if not transcripts.isStreaming:
-        npart = transcripts.rdd.getNumPartitions()
-        dp = transcripts.sparkSession.sparkContext.defaultParallelism
-        if npart < dp:
-            transcripts = transcripts.repartition(dp)
+    transcripts = spread_to_slots(transcripts)
     spans = F.flatten(
         F.transform(
             starts,

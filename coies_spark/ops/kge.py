@@ -58,6 +58,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.spread import spread_to_slots
+
 _DEC = "decimal(28,12)"
 _SEP = "\x1f"
 # one rank task may sort at most this many entity ids before the
@@ -2118,12 +2120,8 @@ def kge_entity_neighbors(
     # state arrives in a handful of partitions, and the |E|² per-pair
     # array folds are the CPU of this face — the gazetteer span-scan
     # rule (scale-adaptive; a no-op when the state is already wide)
-    sc = vecs.sparkSession.sparkContext
-    a_side = vecs
-    if a_side.rdd.getNumPartitions() < sc.defaultParallelism:
-        a_side = a_side.repartition(sc.defaultParallelism)
     dots = (
-        a_side.join(
+        spread_to_slots(vecs).join(
             _maybe_b(b_side, small),
             F.col("id") != F.col("neighbor"),
         )

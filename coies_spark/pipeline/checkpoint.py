@@ -2,12 +2,23 @@
 
 Each pipeline stage materializes to ``<base>/<stage>/data`` (parquet)
 with a ``_MANIFEST.json`` recording: stage name, the run fingerprint
-(config + upstream snapshot ids), row count, per-partition-column row
-counts, wall time, and the upstream stages it consumed.  On re-run, a
-stage whose manifest matches the current fingerprint is *skipped* and
-its snapshot is read back — so a killed pipeline resumes mid-run
-(north_rule: "resumable from checkpoint with per-partition lineage +
-metrics").
+(config + upstream snapshot ids), the written schema, row count,
+per-partition-column row counts, wall time, and the upstream stages it
+consumed.  On re-run, a stage whose manifest matches the current
+fingerprint is *skipped* and its snapshot is read back — so a killed
+pipeline resumes mid-run (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics").
+
+A fresh stage is ONE Spark job, its write: the row count comes from an
+``Observation`` on that write, and the snapshot is read back with the
+recorded schema (partition columns last, every field nullable), so
+neither a footer schema-inference job nor a ``count()`` follows it.
+The recorded schema also keeps partition-column types: a string
+``partition_by`` column whose values look numeric reads back as a
+string, not an inferred int.  Partitioned stages add their lineage
+``groupBy(...).count()``; a resumed stage runs no job at all.  A
+manifest written before the schema was recorded does not match, so
+such a stage is rebuilt once.
 
 On an Iceberg deployment this maps 1:1 to
 ``df.writeTo(table).createOrReplace()`` + snapshot ids in place of
@@ -24,14 +35,21 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
 
 def _fingerprint_str(obj) -> str:
     return json.dumps(obj, sort_keys=True, default=str)
+
+
+def _partitions_last(df: DataFrame, partition_by: Sequence[str]) -> StructType:
+    """``df``'s schema in the column order of its parquet read-back."""
+    fields = [f for f in df.schema.fields if f.name not in partition_by]
+    return StructType(fields + [df.schema[c] for c in partition_by])
 
 
 @dataclass
@@ -60,7 +78,6 @@ class StageRunner:
         name: str,
         build: Callable[[], DataFrame],
         partition_by: Optional[Sequence[str]] = None,
-        repartition: Optional[int] = None,
     ) -> DataFrame:
         """Run or resume one stage; returns the materialized DataFrame."""
         stage_dir, data_path, manifest_path = self._paths(name)
@@ -71,22 +88,24 @@ class StageRunner:
         if os.path.exists(manifest_path):
             with open(manifest_path) as f:
                 manifest = json.load(f)
-            if manifest.get("fingerprint") == fp:
-                df = self.spark.read.parquet(data_path)
+            if manifest.get("fingerprint") == fp and "schema" in manifest:
+                df = self.spark.read.schema(
+                    StructType.fromJson(manifest["schema"])
+                ).parquet(data_path)
                 self.results[name] = StageResult(name, df, True, manifest)
                 return df
 
         t0 = time.time()
         df = build()
-        if repartition:
-            df = df.repartition(repartition)
-        writer = df.write.mode("overwrite")
+        schema = _partitions_last(df, partition_by or [])
+        observed = Observation()
+        writer = df.observe(observed, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_path)
 
-        out = self.spark.read.parquet(data_path)
-        rows = out.count()
+        out = self.spark.read.schema(schema).parquet(data_path)
         lineage: dict[str, int] = {}
         if partition_by:
             for r in (
@@ -97,7 +116,9 @@ class StageRunner:
         manifest = {
             "stage": name,
             "fingerprint": fp,
-            "rows": rows,
+            # the read-back makes every field nullable, as inference does
+            "schema": out.schema.jsonValue(),
+            "rows": observed.get["rows"],
             "partition_rows": lineage,
             "wall_sec": round(time.time() - t0, 3),
             "upstream": sorted(self.results),

@@ -10,15 +10,20 @@ Scale design (10^12 turns, SURVEY.md §7):
   partitioned join semantics); on plain parquet AQE coalesces it.
 * ``detect_mentions`` is shuffle-free: one row per conversation flows
   through ``mapInPandas`` with the example-side artifacts broadcast to
-  every executor.  Window vectors are computed with prefix sums inside
-  the Arrow batch (O(tokens·dim)) and are never materialized into the
-  shuffle — avoiding the ×context_size row blowup a naive
-  windows-as-rows design would ship (SURVEY.md §7 risk 4).
+  every executor.  ``run_pipeline`` hands it the checkpointed s1
+  snapshot, spread round-robin to ``defaultParallelism`` partitions
+  only when that snapshot is narrower than the task slots (one
+  exchange on small inputs that AQE coalesced to a file; none at
+  scale); ``detect_mentions`` itself never repartitions.  Window
+  vectors are computed with prefix sums inside the Arrow batch
+  (O(tokens·dim)) and are never materialized into the shuffle —
+  avoiding the ×context_size row blowup a naive windows-as-rows design
+  would ship (SURVEY.md §7 risk 4).
 * Output (conv_id, pred, obj, score) is tiny relative to input —
   detection is a massive reducer, so downstream stages are cheap.
 
 Reference flow being distributed: oneshot_test.py:193-215 (per-file
-loop) → per-conversation Arrow groups.
+loop) → conversations in Arrow batches.
 """
 
 from __future__ import annotations

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.oneshot import ExampleArtifacts
+from ..operators.spread import spread_to_slots
 from ..ops.kg import entity_degrees, temporal_triples, triple_confidence
 from .canonicalize import canonicalize
 from .checkpoint import MANIFEST, StageRunner
@@ -90,8 +91,13 @@ def run_pipeline(
     docs = runner.stage(
         "s1_docs", lambda: assemble_docs(transcripts, tagged_transcripts)
     )
+    # the s1 snapshot is often narrower than the task slots (AQE
+    # coalesces a small assembly to one file); detection is the CPU of
+    # the build, so spread it — on the snapshot read-back, which plans
+    # without running a job
     mentions = runner.stage(
-        "s2_mentions", lambda: detect_mentions(docs, artifacts)
+        "s2_mentions",
+        lambda: detect_mentions(spread_to_slots(docs), artifacts),
     )
     if dictionary is not None:
         linked = runner.stage(

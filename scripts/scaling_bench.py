@@ -22,6 +22,7 @@ Methodology
 
 Usage: python scripts/scaling_bench.py [--docs 12500] [--rep 8]
        [--out BENCH.md]
+(the one-off input prep runs on local[$SPARK_GRAFT_CPUS], see session.py)
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ from coies_spark.data import synth
 from coies_spark.session import get_spark
 
 out_dir, n_docs, rep = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-spark = get_spark("scaling-prep", cores=32)
+spark = get_spark("scaling-prep")
 corpus = synth.make_corpus(n_test=n_docs // 2, n_plain=n_docs // 2, seed=42)
 frames = {}
 for name, use_raw in (("raw", True), ("tagged", False)):

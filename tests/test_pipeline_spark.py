@@ -6,6 +6,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from coies_spark.core.metrics import triple_prf
 from coies_spark.core.oneshot import (
@@ -14,8 +15,14 @@ from coies_spark.core.oneshot import (
     oracle_extract_doc,
 )
 from coies_spark.data import synth
+from coies_spark.operators.spread import spread_to_slots
 from coies_spark.pipeline.canonicalize import canonicalize
-from coies_spark.pipeline.extract import assemble_docs, extract_mentions
+from coies_spark.pipeline.checkpoint import MANIFEST, StageRunner
+from coies_spark.pipeline.extract import (
+    assemble_docs,
+    detect_mentions,
+    extract_mentions,
+)
 from coies_spark.pipeline.linking import build_dictionary, link_mentions
 from coies_spark.pipeline.triples import conv_triples, run_pipeline
 
@@ -200,9 +207,127 @@ class TestResumability:
         man = r.results["s5_triples"].manifest
         assert man["partition_rows"], "per-pred lineage counts expected"
         assert sum(man["partition_rows"].values()) == man["rows"]
+        # the written schema is recorded, partition column last
+        schema = StructType.fromJson(man["schema"])
+        assert schema == r.results["s5_triples"].df.schema
+        assert schema.fieldNames()[-1] == "pred"
         metrics = r.metrics().collect()
         assert {m.stage for m in metrics} >= {"s1_docs", "s2_mentions",
                                               "s5_triples"}
+
+
+def jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
+class TestStageJobs:
+    """A fresh stage is its write job (plus the lineage query when
+    partitioned); a resumed stage runs no job."""
+
+    def frame(self, spark):
+        return spark.range(200).select(
+            "id", (F.col("id") % 5).cast("string").alias("pred")
+        )
+
+    def test_unpartitioned_stage_is_one_job(self, spark, tmp_path):
+        runner = StageRunner(spark, str(tmp_path), {"v": 1})
+        out, n = jobs_run(
+            spark, lambda: runner.stage("s", lambda: self.frame(spark))
+        )
+        assert n == 1
+        assert runner.results["s"].manifest["rows"] == 200 == out.count()
+
+    def test_partitioned_stage_adds_only_lineage(self, spark, tmp_path):
+        runner = StageRunner(spark, str(tmp_path), {"v": 1})
+        _, n = jobs_run(spark, lambda: runner.stage(
+            "s", lambda: self.frame(spark), partition_by=["pred"]))
+        # the write, then the lineage groupBy(...).count(): under AQE
+        # its shuffle map stage and its result stage are separate jobs
+        assert n == 3
+        man = runner.results["s"].manifest
+        assert man["rows"] == sum(man["partition_rows"].values()) == 200
+
+    def test_resumed_stage_runs_no_job(self, spark, tmp_path):
+        for sub, partition_by in (("flat", None), ("part", ["pred"])):
+            work = str(tmp_path / sub)
+            StageRunner(spark, work, {"v": 1}).stage(
+                "s", lambda: self.frame(spark), partition_by=partition_by)
+            again = StageRunner(spark, work, {"v": 1})
+            _, n = jobs_run(spark, lambda: again.stage(
+                "s", lambda: self.frame(spark),
+                partition_by=partition_by))
+            assert n == 0 and again.results["s"].skipped
+
+    def test_string_partition_column_keeps_its_type(self, spark, tmp_path):
+        work = str(tmp_path)
+        fresh = StageRunner(spark, work, {"v": 1}).stage(
+            "s", lambda: self.frame(spark), partition_by=["pred"])
+        again = StageRunner(spark, work, {"v": 1})
+        resumed = again.stage(
+            "s", lambda: self.frame(spark), partition_by=["pred"])
+        assert again.results["s"].skipped
+        for df in (fresh, resumed):
+            assert df.schema["pred"].dataType == StringType()
+        assert sorted(fresh.collect()) == sorted(resumed.collect()) == \
+            sorted(self.frame(spark).select("id", "pred").collect())
+
+    def test_manifest_without_schema_rebuilds_once(self, spark, tmp_path):
+        import json
+
+        work = str(tmp_path)
+        StageRunner(spark, work, {"v": 1}).stage(
+            "s", lambda: self.frame(spark))
+        path = tmp_path / "s" / MANIFEST
+        man = json.loads(path.read_text())
+        del man["schema"]
+        path.write_text(json.dumps(man))
+        rebuilt = StageRunner(spark, work, {"v": 1})
+        rebuilt.stage("s", lambda: self.frame(spark))
+        assert not rebuilt.results["s"].skipped
+        resumed = StageRunner(spark, work, {"v": 1})
+        resumed.stage("s", lambda: self.frame(spark))
+        assert resumed.results["s"].skipped
+
+
+class TestDetectionSpread:
+    def test_one_file_snapshot_reaches_detection_spread(
+            self, spark, spark_transcripts, artifacts, tmp_path,
+            monkeypatch):
+        import coies_spark.pipeline.triples as triples
+
+        seen = []
+
+        def detect(docs, art):
+            seen.append(docs.rdd.getNumPartitions())
+            return detect_mentions(docs, art)
+
+        monkeypatch.setattr(triples, "detect_mentions", detect)
+        raw, _ = spark_transcripts
+        r = run_pipeline(spark, raw, artifacts, str(tmp_path))
+        # AQE coalesces the small assembly into one snapshot file
+        assert r.results["s1_docs"].df.rdd.getNumPartitions() == 1
+        assert seen == [spark.sparkContext.defaultParallelism]
+
+    def test_wide_snapshot_passes_through(self, spark, tmp_path):
+        slots = spark.sparkContext.defaultParallelism
+        for n_files in (1, 2 * slots):
+            path = str(tmp_path / str(n_files))
+            spark.range(1000).repartition(n_files).write.parquet(path)
+            snap = spark.read.parquet(path)
+            out = spread_to_slots(snap)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            if n_files < slots:
+                assert out.rdd.getNumPartitions() == slots
+                assert plan.count("Exchange RoundRobinPartitioning") == 1
+            else:
+                assert out is snap and "Exchange" not in plan
 
 def test_assemble_docs_caps_oversized_conversations(spark):
     from coies_spark.pipeline.extract import assemble_docs
