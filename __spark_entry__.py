@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 from coies_spark.core.oneshot import ExtractionConfig, build_example_artifacts
 from coies_spark.data import synth
 from coies_spark.operators.salted import salted_count, skew_report
-from coies_spark.operators.graph import connected_components_star
+from coies_spark.operators.graph import connected_components
 from coies_spark.operators.graph import cooccurrence_edges as graph_cooccurrence
 from coies_spark.operators.graph import pagerank as graph_pagerank
 from coies_spark.operators.graph import kcore as graph_kcore
@@ -282,15 +282,17 @@ def _q_entity_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_canonicalize_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH near-dup candidate graph → connected components.  Candidate
     graphs chain near-duplicates, so their diameter is not bounded by
-    construction — use the O(log² n) large-star/small-star variant
-    (the alias graphs inside pipeline.canonicalize stay on neighbor-min
-    propagation, whose diameter IS bounded)."""
+    construction; the union-find of
+    ``operators.graph.connected_components`` needs no rounds, so the
+    diameter does not matter (the same operator as
+    pipeline.canonicalize's alias graphs).  Its one gathering pass
+    holds every paired doc id in one Python worker."""
     docs = _read(spark, sf_dir, "documents")
     edges = dedup.lsh_candidate_pairs(docs).select(
         F.col("doc_a").cast("string").alias("src"),
         F.col("doc_b").cast("string").alias("dst"),
     )
-    return connected_components_star(edges)
+    return connected_components(edges)
 
 
 def _q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1462,7 @@ def _q_incremental_components(
     )
     from coies_spark.operators.graph import incremental_components
 
-    labels = connected_components_star(
+    labels = connected_components(
         pairs.where("__old").select("src", "dst")
     )
     return incremental_components(

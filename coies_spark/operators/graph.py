@@ -1,29 +1,26 @@
-"""Connected components over an edge DataFrame (canonicalization core).
+"""Graph operators over edge DataFrames; connected components is the
+canonicalization core.
 
-Two DataFrame-only algorithms (no GraphFrames dependency):
-
-* ``connected_components`` — simple neighbor-min label propagation
-  (GraphFrames-style).  O(diameter) rounds, one shuffle per round —
-  the right choice for the short-diameter alias graphs entity
-  canonicalization produces.  Convergence is checked every
-  ``check_every`` rounds so long chains don't pay one count() action
-  per round.
-* ``connected_components_star`` — alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14).  O(log² n) rounds regardless of diameter — the web-scale
-  path for graphs whose diameter is not bounded by construction
-  (e.g. LSH candidate-pair graphs chaining near-duplicates).
-
-Both return the same (node, component) labeling: component = min node
-id (string-lexicographic, matching the DuckDB recursive-CTE oracle) in
-the node's connected component.  Lineage is cut with ``localCheckpoint``
-every few rounds so plans don't grow unboundedly (SURVEY.md §7 risk 5).
+``connected_components`` gathers the edges into one partition and
+runs union-find over them in one ``mapInPandas`` pass.  component =
+min node id (string-lexicographic, matching the DuckDB recursive-CTE
+oracle) in the node's connected component.  The plan is lazy, with
+one exchange: no rounds, no convergence probe, no ``localCheckpoint``.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_CC_SCHEMA = "node string, component string"
+# rows per output frame of _union_find: one frame is one Arrow batch,
+# and one batch of a whole node set would copy it again next to the
+# parent map (and a string column past 2 GiB overflows 32-bit offsets)
+_SLICE_ROWS = 1 << 16
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -35,164 +32,77 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def _nodes(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """All edge endpoints — taken from the RAW edges, before
-    ``_symmetrize`` drops self-loops, so a node appearing only in
-    self-loop edges still gets a (node, component=node) row."""
-    return (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
+def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The (a, b) edge batches of one partition → one (node, root) row
+    per node seen, root = min id of the node's component.
+
+    Roots are always the min id of their set (a union hangs the larger
+    root under the smaller), and ``find`` compresses paths.  A null
+    endpoint is no node: the other endpoint still is, and the partition
+    emits one (null, null) row, as the null node of an edge-list
+    union would.  Rows leave in frames of at most ``_SLICE_ROWS``.
+    """
+    parent: dict[str, str] = {}
+    saw_null = False
+
+    def find(x: str) -> str:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for pdf in batches:
+        for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
+            if a is None or b is None:
+                saw_null = True
+                for x in (a, b):
+                    if x is not None:
+                        parent.setdefault(x, x)
+                continue
+            ra = find(parent.setdefault(a, a))
+            rb = find(parent.setdefault(b, b))
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    nodes = list(parent)
+    if saw_null:
+        nodes.append(None)
+    for i in range(0, len(nodes), _SLICE_ROWS):
+        part = nodes[i:i + _SLICE_ROWS]
+        yield pd.DataFrame({
+            "node": part,
+            "component": [None if x is None else find(x) for x in part],
+        })
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    check_every: int = 2,
-    checkpoint_every: int = 4,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """→ (node string, component string): component = min node id
-    reachable from node (undirected).  Converges in O(diameter)
-    rounds; the convergence action only runs every ``check_every``
-    rounds (a converged round is a fixpoint, so running k extra cheap
-    rounds is semantics-free).  Raises if max_iter is hit first.
+    reachable from node (undirected); every non-null endpoint is a node,
+    self-loop-only ones included.
+
+    The edges stream through ONE partition's union-find in Arrow
+    batches, so the pass holds one entry per distinct node in one
+    Python worker: the operator is for entity-id and doc-id graphs
+    (every caller), not for graphs whose node set does not fit one
+    worker's memory.  No per-partition union-find pass runs first: on
+    the callers' graphs (alias chains, LSH near-dup pairs: fewer edges
+    than nodes) such a pass re-emits more rows than it reads, and it
+    saves none of the gather's memory.
+
+    Builds a lazy plan with one exchange and runs no job.
     """
-    # lazy localCheckpoint on the raw projection FIRST: sym, the
-    # initial labels, and (through them) every round and every
-    # convergence probe reference the caller's edge chain — often an
-    # expensive upstream plan (EM link scoring, LSH banding) — and
-    # without this cut each of those references re-runs that chain
-    # from scratch (measured 28.5 s → the EM chain alone for
-    # linkage_clusters at sf0.01)
-    edges0 = edges.select(src, dst).localCheckpoint(eager=False)
-    # second lazy cut on sym: every round's plan and every probe
-    # reference it — without it each action re-runs the
-    # union+distinct over edges0
-    sym = _symmetrize(edges0, src, dst).localCheckpoint(eager=False)
-    labels = _nodes(edges0, src, dst).withColumn(
-        "component", F.col("node")
-    )
-    for it in range(max_iter):
-        # neighbor-min message pass: node's new label = min(own label,
-        # labels of all neighbors)
-        msgs = (
-            sym.join(labels, sym.b == labels.node)
-            .select(sym.a.alias("node"), "component")
-            .union(labels.select("node", "component"))
-        )
-        new_labels = msgs.groupBy("node").agg(
-            F.min("component").alias("component")
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .where(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                return new_labels
-        labels = new_labels
-    raise RuntimeError(
-        f"connected_components: no convergence in {max_iter} iters"
-    )
-
-
-def _large_star(sym: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(Γ⁺(u))."""
-    mins = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("mn"))
-        .select("a", F.least("mn", F.col("a")).alias("m"))
-    )
     return (
-        sym.join(mins, "a")
-        .where(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _small_star(sym: DataFrame) -> DataFrame:
-    """Direct edges large→small, then connect each node's smaller
-    neighborhood (and itself) to its minimum."""
-    directed = sym.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).distinct()
-    mins = directed.groupBy("a").agg(F.min("b").alias("m"))
-    with_min = directed.join(mins, "a")
-    out = (
-        with_min.select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .union(mins.select(F.col("a").alias("a"), F.col("m").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    return out
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """→ (node string, component string) via alternating large-star /
-    small-star (Kiveris SoCC'14): O(log² n) rounds independent of graph
-    diameter.  At the fixpoint the edge set is a union of stars whose
-    centers are the component minima; labels are read straight off the
-    final directed edges.
-    """
-    # lazy localCheckpoint the raw projection: round 1 references sym
-    # four times (two large-star faces + the two fixpoint probes) and
-    # the final labeling reads nodes — without the cut each reference
-    # re-runs the caller's edge chain (for incremental_components
-    # that chain is a FULL prior CC; measured 23 s → 4.5 s at sf0.01)
-    edges0 = edges.select(src, dst).localCheckpoint(eager=False)
-    sym = _symmetrize(edges0, src, dst).localCheckpoint(eager=False)
-    nodes = _nodes(edges0, src, dst)
-    e = sym
-    for it in range(max_iter):
-        e2 = _small_star(_symmetrize(_large_star(e), "a", "b"))
-        # lazy localCheckpoint EVERY round: the fixpoint probe reads
-        # e2_sym twice and the next round reads it again — without the
-        # checkpoint each reference recomputes the whole round's
-        # large-star/small-star DAG (~3× the shuffle work), and lineage
-        # would grow unboundedly besides
-        e2_sym = _symmetrize(e2, "a", "b").localCheckpoint(eager=False)
-        # fixpoint test: the (symmetric, distinct) edge sets are equal —
-        # one action over the union of both early-exit anti-join probes
-        same = (
-            e2_sym.exceptAll(e)
-            .limit(1)
-            .unionByName(e.exceptAll(e2_sym).limit(1))
-            .limit(1)
-            .count()
-            == 0
+        edges.select(
+            F.col(src).cast("string").alias("src"),
+            F.col(dst).cast("string").alias("dst"),
         )
-        e = e2_sym
-        if same:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no convergence in {max_iter} iters"
-        )
-    # stars: every remaining directed edge (a→b) has b = component min
-    directed = e.select(
-        F.greatest("a", "b").alias("node"), F.least("a", "b").alias("m")
-    )
-    labels = directed.groupBy("node").agg(F.min("m").alias("component"))
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            "node", F.coalesce("component", F.col("node")).alias("component")
-        )
+        .repartition(1)
+        .mapInPandas(_union_find, _CC_SCHEMA)
     )
 
 
@@ -788,6 +698,13 @@ def hits(
     then the per-node sum) over the edge list, the same bound as
     distributed PageRank; the max-normalizer is a broadcast 1-row
     cross-join, never a single-partition window.
+
+    Durability: the edge cut and each half-round's raw and normalized
+    scores are lazy ``localCheckpoint`` blocks (4·iters + 1), held in
+    executor storage with no lineage behind them.  They stay pinned
+    while the result is in use, and if an executor holding one dies,
+    the query fails and must be re-run from the caller — the cost of
+    cutting the doubling plan at cluster scale.
     """
     # lazy localCheckpoint: e is referenced by every half-round's
     # join (2·iters of them) plus the node derivation — without the
@@ -1405,8 +1322,8 @@ def incremental_components(
     ingestion face of canonicalization, the graph sibling of
     ``dedup.incremental_neardup`` and ``kg.merge_temporal``.
 
-    ``labels`` is a previous (node, component) labeling from any of
-    this module's CC operators.  The old graph is CONTRACTED to its
+    ``labels`` is a previous (node, component) labeling from
+    :func:`connected_components`.  The old graph is CONTRACTED to its
     star edges (node → component): component ids are min node ids —
     themselves nodes — so the stars preserve old connectivity
     exactly, and components over (stars ∪ new_edges) equal the full
@@ -1415,13 +1332,13 @@ def incremental_components(
     the full-graph recursive-CTE twin, the merge_temporal proof
     pattern.
 
-    Cost: the CC rounds run on |labels| + |new| edges instead of
-    |old| + |new| — at 10¹² accumulated pairs with a daily delta,
-    that is the difference between touching the corpus-scale pair
-    history and touching the entity-scale labeling.  Singleton nodes
-    (component = themselves, no new edges) ride through as
-    self-loops, which ``connected_components_star`` preserves as
-    their own components.
+    Cost: the union-find pass reads |labels| + |new| edges
+    instead of |old| + |new| — at 10¹² accumulated pairs with a daily
+    delta, that is the difference between touching the corpus-scale
+    pair history and touching the entity-scale labeling.  Singleton
+    nodes (component = themselves, no new edges) ride through as
+    self-loops, which ``connected_components`` keeps as their own
+    components.
     """
     stars = labels.select(
         F.col("node").alias("src"), F.col("component").alias("dst")
@@ -1431,7 +1348,7 @@ def incremental_components(
             F.col(src).alias("src"), F.col(dst).alias("dst")
         )
     )
-    return connected_components_star(combined)
+    return connected_components(combined)
 
 
 def degree_histogram(edges: DataFrame) -> DataFrame:

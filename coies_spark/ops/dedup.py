@@ -1225,18 +1225,18 @@ def pair_recall(
 def _component_labels(
     docs: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
-    """docs columns + ``component``: star-contraction components of
-    the near-dup pair graph, every unpaired doc its own singleton
+    """docs columns + ``component``: connected components of the
+    near-dup pair graph, every unpaired doc its own singleton
     (min-string-id labels — the CC convention).  Shared by
     :func:`dedup_representatives` and :func:`soft_dedup_weights` so
     the edge projection / labeling conventions cannot drift."""
-    from ..operators.graph import connected_components_star
+    from ..operators.graph import connected_components
 
     edges = pairs.select(
         F.col("doc_a").cast("string").alias("src"),
         F.col("doc_b").cast("string").alias("dst"),
     )
-    cc = connected_components_star(edges).withColumnRenamed(
+    cc = connected_components(edges).withColumnRenamed(
         "node", "__node"
     )
     return (
@@ -1277,10 +1277,13 @@ def dedup_representatives(
     as a string; filter ``kept`` for the deduped corpus, or join
     ``rep_id`` back for provenance.
 
-    Scale: the O(log² n) star-contraction CC (near-dup candidate
-    graphs CHAIN, so diameter is not bounded by construction —
-    the canonicalize_cc lesson) + one left join + one
-    component-keyed window — no step is all-pairs.
+    Scale: one left join + one component-keyed window, no step
+    all-pairs; the CC is union-find, so the chaining of near-dup
+    candidate graphs (diameter not bounded by construction) costs
+    no rounds.  Bound: the CC's gathering pass holds one entry per
+    distinct PAIRED doc id in a single Python worker (unpaired docs
+    never reach it), so the paired id set must fit one worker's
+    memory.
     """
     labeled = _component_labels(
         docs.select(F.col(id_col), F.col(score_col).alias("__score")),
@@ -1327,11 +1330,13 @@ def soft_dedup_weights(
     into a mixture rate) — the two-op composition IS the method.
 
     Same cluster machinery as :func:`dedup_representatives`
-    (star-contraction components over any near-dup pair frame,
-    singletons weight 1.0); weight = round(1/size, 6).
+    (union-find components over any near-dup pair frame, singletons
+    weight 1.0); weight = round(1/size, 6).
 
-    Scale: the bounded CC + one size groupBy + one component-keyed
-    join — nothing all-pairs, output corpus-sized but only 4 columns.
+    Scale: the CC + one size groupBy + one component-keyed join —
+    nothing all-pairs, output corpus-sized but only 4 columns.  The
+    CC's bound is :func:`dedup_representatives`': every distinct
+    paired doc id in one Python worker.
     """
     labeled = _component_labels(docs.select(F.col(id_col)), pairs, id_col)
     sizes = labeled.groupBy("component").agg(

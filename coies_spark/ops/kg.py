@@ -702,7 +702,7 @@ def khop_reachability(edges: DataFrame, k: int = 3) -> DataFrame:
     # frontier joins it again) — the lazy localCheckpoint materializes
     # it once instead of re-deriving its upstream lineage (dictionary
     # match, co-occurrence build) per reference, the same lineage-cut
-    # pattern as operators.graph.connected_components
+    # pattern as operators.graph.pagerank
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))

@@ -53,12 +53,15 @@ to consume.
 
 from __future__ import annotations
 
+import logging
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.spread import spread_to_slots
+
+_log = logging.getLogger(__name__)
 
 _DEC = "decimal(28,12)"
 _SEP = "\x1f"
@@ -2108,9 +2111,14 @@ def kge_entity_neighbors(
     # driver-side broadcast branch, the trainers' convention: the
     # lazily-checkpointed state hides stats from Catalyst, so AQE
     # cannot make this call itself
-    small = (
-        vecs.count() * n_elems_per_row <= _BCAST_MAX_ELEMS
-    )
+    n_entities = vecs.count()
+    small = n_entities * n_elems_per_row <= _BCAST_MAX_ELEMS
+    if not small:
+        _log.warning(
+            "kge_entity_neighbors: %d entities x %d elements exceed the "
+            "broadcast limit of %d; scoring all pairs by a cartesian "
+            "product", n_entities, n_elems_per_row, _BCAST_MAX_ELEMS,
+        )
     b_side = vecs.select(
         F.col("id").alias("neighbor"),
         F.col("xs").alias("xb"),

@@ -264,9 +264,9 @@ def linkage_clusters(
     ``pairs`` carries the two record-id columns plus the agreement
     fields; ids are cast to string so the min-label component is
     lexicographic on every engine.  Link graphs have bounded
-    diameter by construction (duplicate clusters are dense), so the
-    neighbor-min propagation of ``operators.graph.connected_
-    components`` converges in a handful of rounds.
+    diameter by construction (duplicate clusters are dense); the
+    clustering is ``operators.graph.connected_components``, one
+    union-find pass whatever the diameter.
     """
     scored = linkage_scores(pairs, fields, iters, p0, m0, u0)
     edges = scored.where(

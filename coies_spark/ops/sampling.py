@@ -410,8 +410,10 @@ def leakage_free_split(
     NESTED across fractions — growing the test share only MOVES
     whole groups from train to test, never splits one.
 
-    Scale: the CC of a near-dup graph (bounded diameter) plus one
-    left join and a zero-shuffle hash filter.
+    Scale: the CC of the near-dup graph plus one left join and a
+    zero-shuffle hash filter.  The CC's gathering pass holds one
+    entry per distinct paired doc id in a single Python worker, so
+    the paired id set must fit one worker's memory.
     """
     if not 0.0 < test_fraction < 1.0:
         raise ValueError(

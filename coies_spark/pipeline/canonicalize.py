@@ -7,9 +7,10 @@ same normalized surface to both, or an explicit alias table says so.
 The component representative (min entity id) becomes the canonical
 subject id for triple materialization.
 
-The iterative component search is ``operators.graph.connected_components``
-(DataFrame label propagation); this module only derives the edge set
-and applies the resulting mapping.
+The component search is ``operators.graph.connected_components``
+(union-find over the edges gathered into one partition, no driver
+loop); this module only derives the edge set and applies the
+resulting mapping.
 """
 
 from __future__ import annotations
@@ -50,15 +51,14 @@ def alias_edges(linked: DataFrame, alias_table: DataFrame | None = None) -> Data
 
 
 def canonicalize(
-    linked: DataFrame, alias_table: DataFrame | None = None,
-    max_iter: int = 20,
+    linked: DataFrame, alias_table: DataFrame | None = None
 ) -> DataFrame:
     """→ linked mentions with a ``canonical_id`` column (component
     representative; singleton entities keep their own id)."""
     edges = alias_edges(linked, alias_table)
     if edges.isEmpty():
         return linked.withColumn("canonical_id", F.col("entity_id"))
-    comps = connected_components(edges, max_iter=max_iter).withColumnRenamed(
+    comps = connected_components(edges).withColumnRenamed(
         "node", "entity_id"
     )
     return (

@@ -18,7 +18,10 @@ The recorded schema also keeps partition-column types: a string
 string, not an inferred int.  Partitioned stages add their lineage
 ``groupBy(...).count()``; a resumed stage runs no job at all.  A
 manifest written before the schema was recorded does not match, so
-such a stage is rebuilt once.
+such a stage is rebuilt once.  The manifest is written to a temp file
+in the stage dir and renamed over the old one, so a crash leaves the
+old manifest or the new one; a manifest that does not parse counts as
+absent and its stage is rebuilt.
 
 On an Iceberg deployment this maps 1:1 to
 ``df.writeTo(table).createOrReplace()`` + snapshot ids in place of
@@ -50,6 +53,16 @@ def _partitions_last(df: DataFrame, partition_by: Sequence[str]) -> StructType:
     """``df``'s schema in the column order of its parquet read-back."""
     fields = [f for f in df.schema.fields if f.name not in partition_by]
     return StructType(fields + [df.schema[c] for c in partition_by])
+
+
+def _read_manifest(path: str) -> Optional[dict]:
+    """The manifest at ``path``; None when it is missing or does not
+    parse (a torn write from an older writer), so the stage rebuilds."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
 
 
 @dataclass
@@ -85,15 +98,14 @@ class StageRunner:
             {"stage": name, "run": self.fingerprint,
              "upstream": sorted(self.results)}
         )
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-            if manifest.get("fingerprint") == fp and "schema" in manifest:
-                df = self.spark.read.schema(
-                    StructType.fromJson(manifest["schema"])
-                ).parquet(data_path)
-                self.results[name] = StageResult(name, df, True, manifest)
-                return df
+        manifest = _read_manifest(manifest_path)
+        if manifest and manifest.get("fingerprint") == fp \
+                and "schema" in manifest:
+            df = self.spark.read.schema(
+                StructType.fromJson(manifest["schema"])
+            ).parquet(data_path)
+            self.results[name] = StageResult(name, df, True, manifest)
+            return df
 
         t0 = time.time()
         df = build()
@@ -125,8 +137,10 @@ class StageRunner:
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         os.makedirs(stage_dir, exist_ok=True)
-        with open(manifest_path, "w") as f:
+        tmp = manifest_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(manifest, f, indent=2)
+        os.replace(tmp, manifest_path)
         self.results[name] = StageResult(name, out, False, manifest)
         return out
 

@@ -116,3 +116,17 @@ class TestNeighborsPairParity:
         )
         ref = _long_format_reference(rows, k=3)
         assert _rows(got) == _rows(ref)
+
+
+def test_cartesian_fallback_logs_a_warning(spark, monkeypatch, caplog):
+    """An entity set over the broadcast limit takes the all-pairs
+    cartesian branch and says so in the log."""
+    import logging
+
+    from coies_spark.ops import kge
+
+    t = spark.createDataFrame(TRIPLES, ["subj", "pred", "obj"])
+    monkeypatch.setattr(kge, "_BCAST_MAX_ELEMS", 0)
+    with caplog.at_level(logging.WARNING, logger=kge.__name__):
+        kge_entity_neighbors(t, k=3, model="transe", **CFG)
+    assert any("cartesian" in r.getMessage() for r in caplog.records)

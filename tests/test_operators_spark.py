@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from coies_spark.core.textproc import tokenize
 from coies_spark.functions.tokenize import tokenize_udf, tokens_col
-from coies_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from coies_spark.operators.graph import connected_components
 from coies_spark.operators.salted import salted_count
 
 pytestmark = pytest.mark.spark
@@ -69,6 +66,36 @@ class TestSalted:
         assert plain == salted
 
 
+def cc_oracle(edges):
+    """Driver-side union-find: {node: min id of its component} over
+    every non-null endpoint, plus {None: None} when an endpoint is null
+    (the null node of the edge-list union)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for x in (a, b):
+            parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: None if x is None else find(x) for x in parent}
+
+
+def cc_of(spark, edges, n_slices=None):
+    df = spark.createDataFrame(edges, "src string, dst string")
+    if n_slices:
+        df = df.repartition(n_slices)
+    rows = connected_components(df).collect()
+    got = {r.node: r.component for r in rows}
+    assert len(got) == len(rows), "one row per node"
+    return got
+
+
 class TestConnectedComponents:
     def test_two_components(self, spark):
         edges = spark.createDataFrame(
@@ -79,23 +106,21 @@ class TestConnectedComponents:
         assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
     def test_chain_converges(self, spark):
-        # a long-ish chain exercises multi-iteration propagation +
-        # the localCheckpoint lineage cut
+        # a chain: the worst case for round-based propagation, one
+        # component for the union-find
         n = 12
         edges = spark.createDataFrame(
             [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n)],
             "src string, dst string",
         )
         got = {r.node: r.component
-               for r in connected_components(edges, max_iter=30).collect()}
+               for r in connected_components(edges).collect()}
         assert set(got.values()) == {"n00"}
         assert len(got) == n + 1
 
-
     def test_star_matches_simple_on_random_graphs(self, spark):
-        """large-star/small-star must produce the identical labeling as
-        neighbor-min propagation — random graphs, a long chain (worst
-        case for diameter-bound algorithms), and singleton edges."""
+        """Random graphs, a long chain and singleton edges, each equal
+        to the driver-side union-find."""
         import random
 
         rnd = random.Random(5)
@@ -107,45 +132,143 @@ class TestConnectedComponents:
         cases = [
             [(a, b) for a, b in edges if a != b],
             [(f"c{i:03d}", f"c{i+1:03d}") for i in range(10)],
+            [("s1", "t1"), ("s2", "t2"), ("u", "u")],
         ]
         for edges in cases:
-            df = spark.createDataFrame(edges, "src string, dst string")
-            simple = {
-                (r.node, r.component)
-                for r in connected_components(df, max_iter=60).collect()
-            }
-            star = {
-                (r.node, r.component)
-                for r in connected_components_star(df).collect()
-            }
-            assert star == simple
+            assert cc_of(spark, edges, n_slices=3) == cc_oracle(edges)
 
     def test_star_two_components(self, spark):
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
-        )
-        got = {r.node: r.component
-               for r in connected_components_star(edges).collect()}
-        assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+        """Two stars whose hubs are not their minima, leaves listed as
+        both sources and destinations."""
+        edges = [("hub1", f"a{i}") for i in range(5)] + \
+            [(f"b{i}", "hub2") for i in range(5)]
+        got = cc_of(spark, edges)
+        assert got == cc_oracle(edges)
+        assert set(got.values()) == {"a0", "b0"}
 
     def test_self_loop_only_nodes_are_labeled(self, spark):
-        """A node appearing only in self-loop edges must still get a
-        (node, component=node) row from BOTH algorithms — self-loops
-        are dropped for propagation, not from the node universe."""
-        edges = spark.createDataFrame(
-            [("a", "b"), ("z", "z"), ("b", "b")], "src string, dst string"
-        )
+        """A node appearing only in self-loop edges still gets a
+        (node, component=node) row."""
+        edges = [("a", "b"), ("z", "z"), ("b", "b")]
         want = {"a": "a", "b": "a", "z": "z"}
-        got_simple = {
-            r.node: r.component
-            for r in connected_components(edges).collect()
+        assert cc_oracle(edges) == want
+        assert cc_of(spark, edges) == want
+
+    def test_shuffled_path_across_partitions(self, spark):
+        """A 300-node path with its node ids in random order along the
+        path and its edges shuffled over input partitions: the gather
+        receives the path's pieces from every partition in any order."""
+        import random
+
+        rnd = random.Random(11)
+        ids = [f"p{i:03d}" for i in range(300)]
+        rnd.shuffle(ids)
+        edges = [
+            (ids[i], ids[i + 1]) if rnd.random() < 0.5
+            else (ids[i + 1], ids[i])
+            for i in range(299)
+        ]
+        rnd.shuffle(edges)
+        got = cc_of(spark, edges, n_slices=7)
+        assert got == cc_oracle(edges)
+        assert set(got.values()) == {"p000"}
+
+    def test_giant_star_skew(self, spark):
+        """One hub and 20k leaves (the skew case: the hub is an endpoint
+        of every edge), half the edges hub → leaf, half leaf → hub."""
+        import pandas as pd
+
+        n = 20_000
+        leaves = [f"l{i:05d}" for i in range(n)]
+        edges = [("hub", x) if i % 2 else (x, "hub")
+                 for i, x in enumerate(leaves)]
+        df = spark.createDataFrame(
+            pd.DataFrame(edges, columns=["src", "dst"]))
+        rows = connected_components(df).collect()
+        assert len(rows) == n + 1
+        assert {(r.node, r.component) for r in rows} == set(
+            cc_oracle(edges).items())
+
+    def test_output_spans_several_slices(self, spark, monkeypatch):
+        """More nodes than one output frame holds: the labeling is still
+        exact, and each frame the union-find yields is at most
+        ``_SLICE_ROWS`` rows, the last one carrying the null node."""
+        import pandas as pd
+
+        from coies_spark.operators import graph
+
+        n = graph._SLICE_ROWS + 4_000
+        ids = [f"n{i:06d}" for i in range(n)]
+        edges = [(ids[i], ids[i + 1]) for i in range(0, n, 2)]
+        edges += [(ids[i + 3], ids[i]) for i in range(0, n - 3, 10)]
+        df = spark.createDataFrame(
+            pd.DataFrame(edges, columns=["src", "dst"]))
+        rows = connected_components(df).collect()
+        assert len(rows) == n
+        assert {(r.node, r.component) for r in rows} == set(
+            cc_oracle(edges).items())
+
+        monkeypatch.setattr(graph, "_SLICE_ROWS", 3)
+        small = [("b", "a"), ("c", "d"), ("e", None), ("d", "b")]
+        frames = list(graph._union_find(
+            iter([pd.DataFrame(small, columns=["src", "dst"])])))
+        assert [len(f) for f in frames] == [3, 3]
+        got = pd.concat(frames)
+        assert dict(zip(got.node, got.component)) == cc_oracle(small)
+        assert got.node.iloc[-1] is None
+
+    def test_matches_oracle_property(self, spark):
+        from hypothesis import HealthCheck, given, settings
+        from hypothesis import strategies as st
+
+        node = st.sampled_from(
+            ["a", "b", "B", "c", "aa", "é", "z", "10", "9", None])
+
+        @settings(
+            max_examples=8,
+            deadline=None,
+            suppress_health_check=[HealthCheck.too_slow],
+        )
+        @given(edges=st.lists(st.tuples(node, node), max_size=14))
+        def check(edges):
+            assert cc_of(spark, edges, n_slices=2) == cc_oracle(edges)
+
+        check()
+
+    def test_non_ascii_and_mixed_case_ids(self, spark):
+        """Ids order by code point (Python str order), which is Spark's
+        UTF-8 byte order: upper case before lower case, and a non-BMP
+        id after a high-BMP one (UTF-16 order, Java's, would flip the
+        last pair)."""
+        edges = [("b", "B"), ("é", "e"), ("Zed", "alpha"),
+                 ("\U0001d518", "\ufb01"), ("日本", "Äpfel"),
+                 ("Äpfel", "ärger")]
+        got = cc_of(spark, edges)
+        assert got == cc_oracle(edges)
+        assert got["b"] == "B" and got["é"] == "e" and got["alpha"] == "Zed"
+        assert got["\U0001d518"] == "\ufb01" and got["ärger"] == "Äpfel"
+        # the labels equal Spark's own min over each component's ids
+        spark_min = {
+            r.component: r.m for r in spark.createDataFrame(
+                list(got.items()), "node string, component string"
+            ).groupBy("component").agg(F.min("node").alias("m")).collect()
         }
-        got_star = {
-            r.node: r.component
-            for r in connected_components_star(edges).collect()
-        }
-        assert got_simple == want
-        assert got_star == want
+        assert all(c == m for c, m in spark_min.items())
+
+    def test_null_endpoint_rows(self, spark):
+        """A null endpoint is no node but its partner is one, and the
+        output carries exactly one (null, null) row."""
+        edges = [("a", None), (None, None), ("b", "c"), (None, "c"),
+                 ("d", None)]
+        df = spark.createDataFrame(edges, "src string, dst string")
+        rows = sorted(
+            (tuple(r) for r in connected_components(df).collect()),
+            key=str,
+        )
+        assert rows == [
+            ("a", "a"), ("b", "b"), ("c", "b"), ("d", "d"), (None, None)
+        ]
+        assert dict(rows) == cc_oracle(edges)
 
 
 class TestTokenizerParity:

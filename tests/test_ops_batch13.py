@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from coies_spark.operators.graph import (
-    connected_components_star,
+    connected_components,
     incremental_components,
     random_walks,
 )
@@ -23,13 +23,13 @@ class TestIncrementalComponents:
     def _full(self, spark, rows):
         return {
             (r.node, r.component)
-            for r in connected_components_star(
+            for r in connected_components(
                 _edges(spark, rows)
             ).collect()
         }
 
     def _inc(self, spark, old, new):
-        labels = connected_components_star(_edges(spark, old))
+        labels = connected_components(_edges(spark, old))
         return {
             (r.node, r.component)
             for r in incremental_components(
@@ -65,7 +65,7 @@ class TestIncrementalComponents:
         e1 = [("a", "b"), ("c", "d"), ("e", "f")]
         e2 = [("b", "c")]
         e3 = [("d", "e"), ("g", "h")]
-        l1 = connected_components_star(_edges(spark, e1))
+        l1 = connected_components(_edges(spark, e1))
         l2 = incremental_components(l1, _edges(spark, e2))
         l3 = incremental_components(l2, _edges(spark, e3))
         got = {(r.node, r.component) for r in l3.collect()}

@@ -296,6 +296,27 @@ class TestStageJobs:
         assert resumed.results["s"].skipped
 
 
+    def test_torn_manifest_rebuilds(self, spark, tmp_path):
+        """A manifest cut short mid-write reads as absent: the stage
+        rebuilds with the same rows and leaves a whole manifest."""
+        import json
+
+        work = str(tmp_path)
+        first = StageRunner(spark, work, {"v": 1}).stage(
+            "s", lambda: self.frame(spark))
+        want = sorted(first.collect())
+        path = tmp_path / "s" / MANIFEST
+        text = path.read_text()
+        path.write_text(text[: len(text) // 2])
+        rebuilt = StageRunner(spark, work, {"v": 1})
+        out = rebuilt.stage("s", lambda: self.frame(spark))
+        assert not rebuilt.results["s"].skipped
+        assert sorted(out.collect()) == want
+        assert json.loads(path.read_text())["rows"] == 200
+        assert sorted(p.name for p in (tmp_path / "s").iterdir()) == \
+            ["_MANIFEST.json", "data"]
+
+
 class TestDetectionSpread:
     def test_one_file_snapshot_reaches_detection_spread(
             self, spark, spark_transcripts, artifacts, tmp_path,

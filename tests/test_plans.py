@@ -878,3 +878,28 @@ def test_pra_path_features_plan_shape(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "partial_count" in p
+
+
+def test_connected_components_is_one_exchange_no_job(spark):
+    """Building the CC plan runs no Spark job, and the plan is the one
+    union-find pass: exactly one exchange, the gather into a single
+    partition, with no localCheckpoint scan (LogicalRDD) for rounds or
+    probes."""
+    from coies_spark.operators.graph import connected_components
+
+    edges = spark.range(40).select(
+        (F.col("id") % 13).cast("string").alias("src"),
+        ((F.col("id") * 7) % 19).cast("string").alias("dst"),
+    )
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    cc = connected_components(edges)
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+    p = plan_of(cc, "extended")
+    physical = p[p.index("== Physical Plan =="):]
+    exchanges = [l for l in physical.splitlines() if "Exchange" in l]
+    assert len(exchanges) == 1 and "SinglePartition" in exchanges[0]
+    assert "LogicalRDD" not in p and "ExistingRDD" not in p
