@@ -2,11 +2,14 @@
 
 Each pipeline stage materializes to ``<base>/<stage>/data`` (parquet)
 with a ``_MANIFEST.json`` recording: stage name, the run fingerprint
-(config + upstream snapshot ids), the written schema, row count,
-per-partition-column row counts, wall time, and the upstream stages it
-consumed.  On re-run, a stage whose manifest matches the current
-fingerprint is *skipped* and its snapshot is read back — so a killed
-pipeline resumes mid-run (north_rule: "resumable from checkpoint with
+(the caller's config plus the *names* of the stages run before it), the
+written schema, row count, per-partition-column row counts, wall time,
+and the upstream stages it consumed.  The fingerprint covers neither
+the upstream snapshots' identity nor the input tables, so a resume
+over changed inputs serves the old snapshots (ROADMAP item 1).  On
+re-run, a stage whose manifest matches the current fingerprint is
+*skipped* and its snapshot is read back — so a killed pipeline resumes
+mid-run (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics").
 
 A fresh stage is ONE Spark job, its write: the row count comes from an

@@ -111,9 +111,9 @@ def detect_mentions(docs: DataFrame, artifacts: ExampleArtifacts) -> DataFrame:
     """Run the one-shot kernel per conversation (Arrow batches).
 
     The artifacts (seed vectors + phrase table + embedding provider)
-    are closure-captured → serialized once per task via Spark's
-    broadcast-backed task serialization.  No shuffle: docs is already
-    one row per conv_id.
+    go out as a new ``sc.broadcast`` on every call.  It is never
+    unpersisted, so a stream holds one per epoch (ROADMAP item 4).  No
+    shuffle: docs is already one row per conv_id.
     """
     sc = docs.sparkSession.sparkContext
     bc = sc.broadcast(artifacts)

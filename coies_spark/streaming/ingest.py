@@ -97,11 +97,14 @@ def stream_extract(
     partition instead of appending duplicates.  Combined with the
     streaming checkpoint this yields end-to-end exactly-once output
     (same mechanism as an Iceberg ``overwritePartitions`` commit).
+
+    An epoch runs its write and nothing else.  An empty micro-batch goes
+    through the same write and leaves no triples; probing it first
+    (``isEmpty()``) would cost a job and read the source twice, which
+    doubles the query's reported ``numInputRows``.
     """
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         write_epoch(
             conv_triples(extract_mentions(batch, artifacts)),
             batch_id,

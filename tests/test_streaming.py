@@ -89,6 +89,48 @@ def test_stream_extract_matches_batch(spark, drops, tmp_path, corpus, artifacts)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == got.count()
 
+
+def _one_drop(spark, pdf, in_dir):
+    """A stream source dir holding ``pdf`` as one parquet drop."""
+    spark.createDataFrame(pdf, ingest.TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(
+        str(in_dir)
+    )
+    return str(in_dir)
+
+
+def test_stream_extract_reads_each_drop_once(spark, tmp_path, corpus, artifacts):
+    """An epoch reads its micro-batch once: the query reports the drop's
+    rows, not twice them, and runs only the extraction's own jobs."""
+    pdf = synth.transcripts_frame(corpus.all_docs, use_raw=True)
+    src = _one_drop(spark, pdf, tmp_path / "in")
+    out = str(tmp_path / "triples")
+    q = ingest.stream_extract(
+        ingest.stream_transcripts(spark, src), artifacts, out, str(tmp_path / "ck")
+    )
+    q.awaitTermination(180)
+    assert [p.numInputRows for p in q.recentProgress] == [len(pdf)]
+    # a streaming query tags its jobs with its run id; the epoch's jobs
+    # are its triple write's, with no emptiness probe beside them
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 3
+    assert spark.read.parquet(out).count() > 0
+
+
+def test_stream_extract_empty_drop(spark, tmp_path, corpus, artifacts):
+    """A zero-row drop is one epoch that writes no triples and fails nothing."""
+    pdf = synth.transcripts_frame(corpus.all_docs, use_raw=True).iloc[:0]
+    src = _one_drop(spark, pdf, tmp_path / "in")
+    out = str(tmp_path / "triples")
+    q = ingest.stream_extract(
+        ingest.stream_transcripts(spark, src), artifacts, out, str(tmp_path / "ck")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [p.numInputRows for p in q.recentProgress] == [0]
+    assert [f for _, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")] == []
+
+
 def test_write_epoch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying an epoch must replace
     its own partition, not append duplicates; other epochs untouched."""
